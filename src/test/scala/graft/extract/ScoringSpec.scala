@@ -21,6 +21,28 @@ class ScoringSpec extends AnyFunSuite {
     assert(base.calculateNodeScore(e2) == -12)
   }
 
+  test("live tables score article.content holding a 250-char p as 10+8+2+1") {
+    // article 10 + content 8 + text 250 → +2 + one <p> → +1
+    val e = elem(s"<body><article class=\"content\"><p>${"x" * 250}</p></article></body>", "article")
+    assert(base.calculateNodeScore(e) == 10 + 8 + 2 + 1)
+  }
+
+  test("live tables pick div.content over section.text at stage 4") {
+    // byte-identical inner content, so only the tag/class weights
+    // differ: div.content 4+8=12 vs section.text 6+4=10. Neither
+    // matches a stage-2/3 selector, so findBestNode decides.
+    def para(w: String) = s"<p>${(w + " ") * 12}end.</p>"
+    def body(w: String) = para(w) * 6
+    val html =
+      s"""<html><body>
+         |<div class="content">${body("alpha")}</div>
+         |<section class="text">${body("bravo")}</section>
+         |</body></html>""".stripMargin
+    val r = base.extract(html, "https://example.com/w")
+    assert(r.metrics.fallbackStage == 4)
+    assert(r.textContent.startsWith("alpha"))
+  }
+
   test("text length bonus caps at 10") {
     val text = "x" * 2500
     val e = elem(s"<body><div>$text</div></body>", "div")
