@@ -72,16 +72,20 @@ final class ParquetSnapshotStore(root: String) extends TranscriptStore {
     // form costing 3 small-job latencies per commit group). The
     // atomic directory-rename publish below still happens only after
     // ALL three have completed — snapshot visibility is unchanged.
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
-      Future(data.write.mode(SaveMode.Overwrite)
-        .parquet(staging.resolve("data").toString)),
-      Future(lineage.write.mode(SaveMode.Overwrite)
-        .parquet(staging.resolve("_lineage").toString)),
-      Future(metrics.write.mode(SaveMode.Overwrite)
-        .parquet(staging.resolve("_metrics").toString)))), Duration.Inf)
+    val writes = Seq(data -> "data", lineage -> "_lineage", metrics -> "_metrics")
+      .map { case (df, dir) => Future(blocking(
+        df.write.mode(SaveMode.Overwrite).parquet(staging.resolve(dir).toString))) }
+    // wait for ALL three before acting on a failure: failing fast (as
+    // Future.sequence does) would delete staging while the other jobs
+    // still write into it, and leave them running past the rethrow
+    val failures = writes.flatMap(f => Await.ready(f, Duration.Inf).value.get.failed.toOption)
+    if (failures.nonEmpty) {
+      CheckpointedExtract.deleteTree(staging)
+      throw failures.head
+    }
     Files.writeString(staging.resolve("_buckets"), doneBuckets.mkString(","))
     // single atomic publish
     Files.move(staging, snapDir(next), StandardCopyOption.ATOMIC_MOVE)
@@ -106,6 +110,14 @@ final class ParquetSnapshotStore(root: String) extends TranscriptStore {
   * function of the turn.
   */
 object CheckpointedExtract {
+
+  /** Best-effort recursive delete of a local staging directory. */
+  private[pipeline] def deleteTree(dir: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    try Files.walk(dir).iterator().asScala.toSeq.reverse
+      .foreach(Files.deleteIfExists(_))
+    catch { case _: Throwable => () }
+  }
 
   def lineageOf(extracted: DataFrame): DataFrame =
     extracted.groupBy(spark_partition_id().as("partition_id")).agg(
@@ -164,11 +176,6 @@ object CheckpointedExtract {
           .drop("bucket")
         store.commit(data, lineageOf(data), metricsOf(data), group)
       }.toSeq
-    } finally {
-      import scala.jdk.CollectionConverters._
-      try Files.walk(staging).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
-      catch { case _: Throwable => () }
-    }
+    } finally deleteTree(staging)
   }
 }

@@ -29,22 +29,6 @@ object Similarity {
   private def cosine(s: SparkSession, a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
 
-  /** Re-shuffle the embeddings input to full parallelism before the
-    * heavy per-vector compute (signatures, quantization, pairwise
-    * scoring). The sandbox `embeddings.parquet` is ONE small file =
-    * one input split, and nothing downstream re-shuffles the probe
-    * side (the dimension-side lookups auto-broadcast), so the whole
-    * signature/candidate compute inherited a single partition — every
-    * recorded sweep ran q10/q15 at utilization ~0.03 on 32 cores
-    * (round-5 VERDICT #2). At 100 TB splits abound and this
-    * round-robin shuffle of (vec_id, embedding) is noise; in-sandbox
-    * it is the difference between 1 and 32 active cores. Values are
-    * partition-independent (integer/left-fold arithmetic throughout),
-    * so oracle hash parity is unchanged. */
-  private def repart(s: SparkSession, e: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    e.repartition(s.sparkContext.defaultParallelism)
-
   /** Bounded top-k per vec_id via the typed TopNeighbors aggregate —
     * map-side partial top-k instead of a full window shuffle+sort
     * (see graft.functions.TopNeighbors). Output matches the oracle's
@@ -86,7 +70,7 @@ object Similarity {
   private[graft] def exactTopK(s: SparkSession,
                                e0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     GraftFunctions.register(s)
-    val e = repart(s, e0)
+    val e = Tables.parallelize(e0)
     val p = e.as("a").join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"),
         cosine(s, col("a.embedding"), col("b.embedding")).as("sim"))
@@ -108,7 +92,7 @@ object Similarity {
       |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / (a.nrm*b.nrm) >= 0.3
       |ORDER BY id1, id2""".stripMargin) { (s, d) =>
     GraftFunctions.register(s)
-    val e = repart(s, Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
+    val e = Tables.parallelize(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"),
         cosine(s, col("a.embedding"), col("b.embedding")).as("sim"))
@@ -201,6 +185,26 @@ object Similarity {
        |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, neighbor_id) AS rank FROM scored)
        |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin
 
+  /** Spark side of [[annCtes]]: the per-band bucket table
+    * (vec_id, band, sig) from [[Lsh.bandTable]] — longs only,
+    * embeddings are NOT carried through the candidate shuffle.
+    * Projections are the codegen'd dot_fd against LITERAL
+    * hyperplane arrays (precomputed with the oracle's exact integer
+    * arithmetic) — the interpreted HOF form was the dominant
+    * signature-stage cost at bands·bits = 96 projections/vector. */
+  private def annSigs(s: SparkSession, e: org.apache.spark.sql.DataFrame,
+                      n: Long)
+      : org.apache.spark.sql.DataFrame = {
+    val bits = annBits(n) // caller probes n on the RAW scan (metadata-only)
+    val dim = e.select(size(col("embedding"))).head().getInt(0) // uniform-dim corpus
+    def proj(g: Int): Column =
+      call_function("dot_fd", col("embedding"), typedlit(hyperArr(g, dim)))
+    def sig(t: Int): Column = (0 until bits).map { b =>
+      when(proj(t * bits + b) >= 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
+    Lsh.bandTable(e, "vec_id", "sig", (0 until AnnBands).map(sig))
+  }
+
   /** LSH-bucketed approximate NN, multi-band OR-construction:
     * [[AnnBands]] independent random-hyperplane signatures of
     * [[annBits]] bits each; a pair is a candidate if it collides in
@@ -216,35 +220,11 @@ object Similarity {
     * sf0.001 — on a corpus whose true top-3 are WEAK neighbors
     * (median cosine 0.33), the hard case for sign-LSH.
     */
-  /** Spark side of [[annCtes]]: the per-band bucket table
-    * (vec_id, band, sig) — longs only, embeddings are NOT carried
-    * through the candidate shuffle; cached (it feeds both self-join
-    * sides). Projections are the codegen'd dot_fd against LITERAL
-    * hyperplane arrays (precomputed with the oracle's exact integer
-    * arithmetic) — the interpreted HOF form was the dominant
-    * signature-stage cost at bands·bits = 96 projections/vector. */
-  private def annSigs(s: SparkSession, e: org.apache.spark.sql.DataFrame,
-                      n: Long)
-      : org.apache.spark.sql.DataFrame = {
-    val bits = annBits(n) // caller probes n on the RAW scan (metadata-only)
-    val dim = e.select(size(col("embedding"))).head().getInt(0) // uniform-dim corpus
-    def proj(g: Int): Column =
-      call_function("dot_fd", col("embedding"), typedlit(hyperArr(g, dim)))
-    def sig(t: Int): Column = (0 until bits).map { b =>
-      when(proj(t * bits + b) >= 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-    val bandCols = (0 until AnnBands)
-      .map(t => struct(lit(t).as("band"), sig(t).as("sig")))
-    TempCaches.cached(
-      e.select(col("vec_id"), explode(array(bandCols: _*)).as("bs"))
-        .select(col("vec_id"), col("bs.band").as("band"), col("bs.sig").as("sig")))
-  }
-
   val q15 = Q("q15_cosine_ann_lsh", q15Sql) { (s, d) =>
     GraftFunctions.register(s)
     val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val n = e0.count() // metadata-only parquet row count
-    val e = repart(s, e0)
+    val e = Tables.parallelize(e0)
     val sigs = annSigs(s, e, n)
     // NO distinct over the multi-band candidates: duplicate pairs
     // from different bands carry bitwise-identical sims and the
@@ -288,16 +268,11 @@ object Similarity {
     GraftFunctions.register(s)
     val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val n = e0.count() // metadata-only parquet row count
-    val e = repart(s, e0)
+    val e = Tables.parallelize(e0)
     val sigs = annSigs(s, e, n)
-    // distinct IS needed here (unlike q15): the pair list is the
-    // output, and multi-band duplicates would duplicate rows
-    val cand = sigs.as("a").join(sigs.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"))
-      .distinct()
-    cand
+    // distinct pairs (unlike q15): the pair list is the output, and
+    // multi-band duplicates would duplicate rows
+    Lsh.bucketPairs(sigs, "vec_id", "sig", "id1", "id2")
       .join(e.select(col("vec_id").as("id1"), col("embedding").as("e1")), "id1")
       .join(e.select(col("vec_id").as("id2"), col("embedding").as("e2")), "id2")
       .select(col("id1"), col("id2"), cosine(s, col("e1"), col("e2")).as("sim"))
@@ -403,7 +378,7 @@ object Similarity {
     GraftFunctions.register(s)
     val n = e.count() // metadata-only parquet row count (as q15/q19)
     val k = kOverride.getOrElse(ivfK(n))
-    val ep = repart(s, e)
+    val ep = Tables.parallelize(e)
     val qe = TempCaches.cached(ep.select(col("vec_id"),
       transform(col("embedding"), x => round(x * 1024).cast("long")).as("qv")))
     // init: the K lowest vec_ids (deterministic, no RNG)

@@ -17,8 +17,9 @@ object Tables {
     * table is ONE small parquet file with ONE row group = one
     * unsplittable input split, so all scan-side per-row compute —
     * tokenize/shingle explode, regex scrub, codec work, map-side
-    * partial aggregation — ran on 1 of 32 cores; the same defect
-    * round 6 fixed for `embeddings` only, Similarity.repart). The
+    * partial aggregation — ran on 1 of 32 cores). The one rebalance
+    * policy for every table, `embeddings` included: the similarity
+    * queries call it before their per-vector compute. The
     * condition makes it scale-adaptive rather than local-tuned: at
     * production scale scans have >= parallelism splits and this is a
     * no-op — no shuffle is added. Values are partition-independent

@@ -140,14 +140,15 @@ object TextPipeline {
     * (q07/q18/q36/q38/q41/q43/q47) loses one full-posting shuffle.
     * Per-row memory is bounded by document length — the same contract
     * the token array `w` already had. */
-  private[graft] def shingles(df: DataFrame): DataFrame = {
-    val w = toks(col("text"))
-    df.select(col("doc_id"), w.as("w"))
+  private[graft] def shingles(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), toks(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        explode(array_distinct(transform(sequence(lit(1), size(col("w")) - 2),
-          i => concat_ws(" ", slice(col("w"), i, lit(3)))))).as("shingle"))
-  }
+      .select(col("doc_id"), explode(array_distinct(shingleArr(col("w")))).as("shingle"))
+
+  /** The word-3-grams of token array `w` in document order, repeats
+    * kept (q46 counts them); `w` must hold ≥ 3 tokens. */
+  private def shingleArr(w: Column): Column =
+    transform(sequence(lit(1), size(w) - 2), i => concat_ws(" ", slice(w, i, lit(3))))
   private val shinglesSql =
     s"""words AS (SELECT doc_id, $toksSql AS w FROM documents),
        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS shingle
@@ -172,18 +173,30 @@ object TextPipeline {
     // shingle builds (the q45 lesson, see TempCaches.pinned)
     val sh = TempCaches.pinned(shingles(Tables.parallelize(Tables.documents(s, d))))
     val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pairs = sh.as("a").join(sh.as("b"),
+    jaccardAtLeastHalf(commonCounts(sh, sh), cnt)
+      .orderBy(col("doc1"), col("doc2"))
+  }
+
+  /** Shared-shingle counts of every doc pair (doc1 from `a` < doc2
+    * from `b`) joined by at least one shingle: (doc1, doc2, common).
+    * Both sides are (doc_id, shingle) postings. */
+  private def commonCounts(a: DataFrame, b: DataFrame): DataFrame =
+    a.as("a").join(b.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
       .agg(count(lit(1)).as("common"))
+
+  /** The near-dup verdict: attach exact Jaccard = common / |union|
+    * to each (doc1, doc2, common) pair from the per-doc set sizes
+    * (doc_id, n) and keep the pairs with Jaccard ≥ 0.5. */
+  private def jaccardAtLeastHalf(common: DataFrame, sizes: DataFrame): DataFrame = {
     val jac = col("common").cast("double") /
       (col("n1") + col("n2") - col("common")).cast("double")
-    pairs
-      .join(cnt.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
-      .join(cnt.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
+    common
+      .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
+      .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
       .select(col("doc1"), col("doc2"), col("common"), jac.as("jaccard"))
       .filter(col("jaccard") >= 0.5)
-      .orderBy(col("doc1"), col("doc2"))
   }
 
   /** Shingles present in more than this many documents are dropped by
@@ -192,16 +205,9 @@ object TextPipeline {
     * scale (one key joining k docs costs O(k²) pairs). */
   private val HotShingleDfCap = 10
 
-  /** q07 with the hot-shingle document-frequency cap — the
-    * scale-safe variant (q07's own scale note, round-1 VERDICT #7).
-    * Per-doc set sizes are recomputed on the CAPPED sets so Jaccard
-    * stays a true set similarity of what was joined. Kept as a
-    * separate query (own oracle) so q07's uncapped oracle parity is
-    * untouched. */
-  /** Capped-Jaccard near-dup pairs (the q18/q36 engine) over any
-    * (doc_id, text) table: shingle → df-cap hot shingles → self-join →
-    * exact Jaccard ≥ 0.5 on the capped sets. */
-  private def cappedJaccardPairs(docs: DataFrame): DataFrame = {
+  /** The (doc_id, shingle) postings of `docs` without the hot
+    * shingles (df > [[HotShingleDfCap]]); pinned. */
+  private def cappedPostings(docs: DataFrame): DataFrame = {
     // pinned: the shingle set feeds BOTH the df computation and the
     // capped join input — those materialize concurrently under AQE
     // and race a lazy cache into duplicate tokenization
@@ -212,22 +218,19 @@ object TextPipeline {
     val keep = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= HotShingleDfCap)
       .select(col("shingle"))
-    // pinned: the capped postings feed the set-size agg AND both pair
-    // sides — lineage truncation keeps AQE re-optimization of the
-    // self-join tree cheap (see TempCaches.pinned)
-    val shc = TempCaches.pinned(sh.join(keep, "shingle"))
+    // pinned: the capped postings feed the set-size agg and every pair
+    // side — lineage truncation keeps AQE re-optimization of the deep
+    // self-join trees cheap (see TempCaches.pinned)
+    TempCaches.pinned(sh.join(keep, "shingle"))
+  }
+
+  /** Capped-Jaccard near-dup pairs (the q18/q36 engine) over any
+    * (doc_id, text) table: shingle → df-cap hot shingles → self-join →
+    * exact Jaccard ≥ 0.5 on the capped sets. */
+  private def cappedJaccardPairs(docs: DataFrame): DataFrame = {
+    val shc = cappedPostings(docs)
     val cnt = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pairs = shc.as("a").join(shc.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .agg(count(lit(1)).as("common"))
-    val jac = col("common").cast("double") /
-      (col("n1") + col("n2") - col("common")).cast("double")
-    pairs
-      .join(cnt.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
-      .join(cnt.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
-      .select(col("doc1"), col("doc2"), col("common"), jac.as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+    jaccardAtLeastHalf(commonCounts(shc, shc), cnt)
   }
 
   /** Probe-restricted capped-Jaccard pairs: the subset of
@@ -243,17 +246,17 @@ object TextPipeline {
     * still computed over the FULL union, so every emitted pair is
     * value-identical to the unrestricted machinery (the q41 oracle
     * generates ALL pairs and filters; only probe-touching pairs can
-    * drop anything, so results match). */
+    * drop anything, so results match).
+    *
+    * PRECONDITION: doc_ids are unique in `u`, and every `probeDocs`
+    * row is a row of `u` (same doc_id, same text). The probe postings
+    * are read off `u`'s postings by doc_id, so a probe doc missing
+    * from `u` is silently ignored and a duplicated doc_id merges two
+    * shingle sets. Not checked at run time: that would cost q41 an
+    * extra Spark job; incrementalIngest builds `u` as store ∪ batch
+    * over disjoint ids. */
   private def cappedJaccardPairsProbe(u: DataFrame, probeDocs: DataFrame): DataFrame = {
-    val sh = TempCaches.pinned(shingles(u))
-    val keep = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= HotShingleDfCap)
-      .select(col("shingle"))
-    // pinned, not cached: shc feeds FOUR downstream consumers (shp,
-    // cnt, both pair terms) — truncating its lineage here keeps every
-    // AQE stage-boundary re-optimization of the deep q41 tree cheap
-    // (see TempCaches.pinned)
-    val shc = TempCaches.pinned(sh.join(keep, "shingle"))
+    val shc = cappedPostings(u)
     // probe postings = the capped union postings restricted to probe
     // docs. shingles() is per-doc, so this is ROW-IDENTICAL to the
     // round-6 form (re-shingle the probe slice, re-apply the cap) but
@@ -265,27 +268,14 @@ object TextPipeline {
       shc.join(probeDocs.select(col("doc_id")), Seq("doc_id"), "left_semi"))
     val cnt = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // term 1: any-lower × probe-higher (includes probe×probe, counted here)
-    val t1 = shc.as("a").join(shp.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .agg(count(lit(1)).as("common"))
+    val t1 = commonCounts(shc, shp)
     // term 2: probe-lower × any-higher; its probe×probe overlap with
     // term 1 is removed POST-aggregation (the pair table is tiny next
     // to the candidate stream, so the doc_id-keyed anti-join is cheap)
     val probeIds = probeDocs.select(col("doc_id"))
-    val t2 = shp.as("a").join(shc.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .agg(count(lit(1)).as("common"))
+    val t2 = commonCounts(shp, shc)
       .join(probeIds.select(col("doc_id").as("doc2")), Seq("doc2"), "left_anti")
-    val pairs = t1.unionAll(t2.select(col("doc1"), col("doc2"), col("common")))
-    val jac = col("common").cast("double") /
-      (col("n1") + col("n2") - col("common")).cast("double")
-    pairs
-      .join(cnt.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
-      .join(cnt.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
-      .select(col("doc1"), col("doc2"), col("common"), jac.as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+    jaccardAtLeastHalf(t1.unionAll(t2.select(col("doc1"), col("doc2"), col("common"))), cnt)
   }
 
   /** The q18/q36 pair CTEs over a source relation `src` that provides
@@ -306,6 +296,12 @@ object TextPipeline {
        |  FROM pairs0 JOIN cnt c1 ON doc1 = c1.doc_id JOIN cnt c2 ON doc2 = c2.doc_id
        |  WHERE CAST(common AS DOUBLE)/CAST(c1.n + c2.n - common AS DOUBLE) >= 0.5)""".stripMargin
 
+  /** q07 with the hot-shingle document-frequency cap — the
+    * scale-safe variant (q07's own scale note, round-1 VERDICT #7).
+    * Per-doc set sizes are recomputed on the CAPPED sets so Jaccard
+    * stays a true set similarity of what was joined. Kept as a
+    * separate query (own oracle) so q07's uncapped oracle parity is
+    * untouched. */
   val q18 = Q(
     "q18_shingle_jaccard_capped",
     s"""WITH ${cappedPairsSql("documents")}
@@ -452,8 +448,8 @@ object TextPipeline {
   private val Bands = 8 // 8 bands x 4 rows
   /** Per-permutation affine constants over the q14 prime field,
     * inlined as literals into BOTH the Spark plan and the oracle SQL
-    * (so they agree by construction). All nonzero mod P (asserted in
-    * QueriesSpec). */
+    * (so they agree by construction). Every multiplier is nonzero
+    * mod P (the require below). */
   private val P = 1000000007L
   private def mhA(i: Int): Long = ((i + 1) * 2654435761L) % P
   private def mhB(i: Int): Long = ((i + 1) * 2654777831L) % P
@@ -541,24 +537,16 @@ object TextPipeline {
         sfp => (lit(mhA(i)) * sfp + lit(mhB(i))) % P)).as(s"mh$i"))
     val sig = sfpArr.select(col("doc_id") +: aggs: _*)
     val rowsPerBand = MinhashPerms / Bands
-    val bandCols = (0 until Bands).map { b =>
-      val bh = (0 until rowsPerBand)
+    val bandHashes = (0 until Bands).map { b =>
+      (0 until rowsPerBand)
         .map(r => col(s"mh${b * rowsPerBand + r}"))
         .foldLeft(lit(0L): Column)((acc, v) => (acc * 131L + v) % P)
-      struct(lit(b).as("band"), bh.as("bh"))
     }
-    // cache: the bucket table is tiny (Bands rows per doc) and feeds
-    // BOTH sides of the self-join — without it the whole shingle →
-    // signature pipeline is recomputed per side
-    val buckets = TempCaches.cached(
-      sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh")))
-    val cand = TempCaches.pinned(buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .distinct()) // tiny; feeds the doc-id reduction AND the verify join
-      // (pinned so the band self-join runs once, not once per consumer)
+    // the bucket table is tiny (Bands rows per doc)
+    val buckets = Lsh.bandTable(sig, "doc_id", "bh", bandHashes)
+    // pinned: the candidates feed the doc-id reduction AND the verify
+    // join, so the band self-join runs once, not once per consumer
+    val cand = TempCaches.pinned(Lsh.bucketPairs(buckets, "doc_id", "bh", "doc1", "doc2"))
     // verify candidates with exact Jaccard — but FIRST semi-join-
     // reduce the shingle table to candidate doc_ids: candidates are a
     // vanishing fraction of the corpus at scale (that is the point of
@@ -580,13 +568,7 @@ object TextPipeline {
       .join(shCand.select(col("doc_id").as("doc1"), col("sfp")), "doc1")
       .join(shCand.select(col("doc_id").as("doc2"), col("sfp")), Seq("doc2", "sfp"))
       .groupBy(col("doc1"), col("doc2")).agg(count(lit(1)).as("common"))
-    common
-      .join(cnt.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
-      .join(cnt.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
-      .select(col("doc1"), col("doc2"), col("common"),
-        (col("common").cast("double") /
-          (col("n1") + col("n2") - col("common")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+    jaccardAtLeastHalf(common, cnt)
       .orderBy(col("doc1"), col("doc2"))
   }
 
@@ -1131,12 +1113,9 @@ object TextPipeline {
   // and are absent, as in q07/q43.
   // ------------------------------------------------------------------
   private[graft] def repetition(docs: DataFrame): DataFrame = {
-    val w = toks(col("text"))
-    val shAll = docs.select(col("doc_id"), w.as("w"))
+    val shAll = docs.select(col("doc_id"), toks(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(1), size(col("w")) - 2),
-          i => concat_ws(" ", slice(col("w"), i, lit(3))))).as("shingle"))
+      .select(col("doc_id"), explode(shingleArr(col("w"))).as("shingle"))
     val perShingle = shAll.groupBy(col("doc_id"), col("shingle"))
       .agg(count(lit(1)).as("c"))
     val dupRatio = (col("n_sh") - col("n_distinct")).cast("double") / col("n_sh").cast("double")

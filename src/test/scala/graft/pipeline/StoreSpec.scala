@@ -50,6 +50,29 @@ class StoreSpec extends AnyFunSuite {
     assert(CheckpointedExtract.run(spark, turns, store, buckets = 8).isEmpty)
   }
 
+  test("failed staging write: commit throws, no staging dir leaks, snapshot unchanged, resume is clean") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-store-fail")
+    val store = new ParquetSnapshotStore(dir.toString)
+    val bucket = pmod(xxhash64(col("conv_id")), lit(8))
+    val first = ExtractJob.run(spark, turns.filter(bucket.isin(0L, 1L, 2L, 3L)))
+    store.commit(first, CheckpointedExtract.lineageOf(first),
+      CheckpointedExtract.metricsOf(first), Seq(0, 1, 2, 3))
+    val rest = ExtractJob.run(spark, turns.filter(bucket.isin(4L, 5L, 6L, 7L)))
+    // the metrics job fails in its tasks; data and lineage write fine
+    val badMetrics = CheckpointedExtract.metricsOf(rest)
+      .withColumn("n_turns", raise_error(lit("injected metrics failure")).cast("long"))
+    intercept[Exception](store.commit(rest, CheckpointedExtract.lineageOf(rest),
+      badMetrics, Seq(4, 5, 6, 7)))
+    val leaked = Files.list(dir).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("_tmp_")).toSeq
+    assert(leaked.isEmpty)
+    assert(store.currentSnapshot().contains(0L))
+    assert(store.committedBuckets() == Set(0, 1, 2, 3))
+    assert(CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4) == Seq(1L))
+    assert(fingerprint(store.readData(spark)) == fingerprint(ExtractJob.run(spark, turns)))
+  }
+
   test("empty input still commits every todo bucket (resume/empty-corpus)") {
     // the one-pass rewrite stages the extracted slice with partitionBy;
     // a zero-row slice writes no data files, so the read-back must use
